@@ -16,11 +16,15 @@ Idempotence / replay-safety (SURVEY §2.8 ST3): re-applying a batch is a
 no-op; an older order_col never regresses a newer row.
 
 Scale note (100 TB): a naive full-outer join rewrites the whole table per
-batch. ``upsert`` therefore hash-buckets the table by key and joins only
-the buckets the batch touches (dynamic partition overwrite) — work
-proportional to the batch's key spread, not table size. The
-incremental batch is tiny relative to the table, so the join side of the
-touched partitions is broadcast-eligible and AQE will pick that.
+batch. ``upsert`` therefore hash-buckets the table by key, joins only the
+buckets the batch touches, and rewrites (dynamic partition overwrite)
+only the buckets where the MERGE applies at least one row — work
+proportional to the batch's key spread, not table size. A replay or an
+all-stale batch writes nothing. Every write clusters its rows on the
+bucket (``REBALANCE`` hint), so a bucket is one file unless AQE splits an
+oversized one at the advisory partition size. The incremental batch is
+tiny relative to the table, so the join side of the touched partitions
+is broadcast-eligible and AQE will pick that.
 """
 
 from __future__ import annotations
@@ -39,6 +43,14 @@ ETL_COLS = ("etl_batch_id", "etl_created_at", "etl_updated_at", "etl_source")
 
 def _bucket_expr(keys: Sequence[str], num_buckets: int) -> Column:
     return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(num_buckets)).alias("__bucket")
+
+
+def _clustered(df: DataFrame) -> DataFrame:
+    """Cluster rows on ``__bucket`` before a partitioned write, so each
+    bucket lands in one task and is written as one file. Unlike
+    ``repartition("__bucket")`` the REBALANCE hint lets AQE split an
+    oversized bucket and does not cap the write at one task per bucket."""
+    return df.hint("rebalance", "__bucket")
 
 
 _BUCKET_MARKER = "_bucket_count"
@@ -80,12 +92,13 @@ def write_table(
 ) -> None:
     """Full-load (truncate+insert, K2) writer in the upsert-compatible
     hash-bucketed layout: dedup keep-newest, optional null-key drop (D5,
-    MISA parity), bucket by key hash, overwrite."""
+    MISA parity), bucket by key hash, overwrite with the rows clustered on
+    the bucket (one file per bucket at moderate size)."""
     out = keep_newest(df, keys, order_col, tiebreak)
     if drop_null_key_rows:
         out = drop_null_keys(out, keys)
     out = out.withColumn("__bucket", _bucket_expr(keys, num_buckets))
-    out.write.partitionBy("__bucket").mode("overwrite").parquet(table_path)
+    _clustered(out).write.partitionBy("__bucket").mode("overwrite").parquet(table_path)
     _write_bucket_marker(table_path, num_buckets, spark)
     # Derived index artifacts (IVF lists, cluster assignments, TF/basket
     # intermediates) are now stale — drop them eagerly. The fingerprint
@@ -198,9 +211,14 @@ def upsert(
 
     The table is stored hash-bucketed on the key (``bucket=pmod(hash(keys),
     num_buckets)`` as a partition column). Only buckets containing batch
-    keys are read + rewritten (partition pruning on the bucket filter), so
-    per-batch work scales with batch size, not table size. At 100 TB a
-    second partition level (e.g. etl_date) would bound file counts further.
+    keys are read (partition pruning on the bucket filter), and of those
+    only the buckets where the MERGE inserts or updates a row are
+    rewritten, each as one file; a touched bucket the batch does not
+    change keeps its files byte-identical. A batch that applies no row (a
+    replay, or only stale rows) writes nothing and leaves the table's
+    listing and its derived index artifacts in place. Per-batch work
+    scales with batch size, not table size. At 100 TB a second partition
+    level (e.g. etl_date) would bound file counts further.
     """
     if not fsops.exists(table_path, spark):
         write_table(spark, source, table_path, keys, order_col, num_buckets,
@@ -213,26 +231,45 @@ def upsert(
 
     touched = [r["__bucket"] for r in source_b.select("__bucket").distinct().collect()]
     target = spark.read.parquet(table_path).filter(F.col("__bucket").isin(touched))
-    resolved = resolve_upsert(target, source_b, keys, order_col, guard_cols,
+    # ``__applied`` marks the rows the MERGE takes from the batch: the
+    # resolve's per-column projection carries it through from whichever
+    # side wins, so a row is flagged exactly when it is inserted or updated.
+    resolved = resolve_upsert(target.withColumn("__applied", F.lit(False)),
+                              source_b.withColumn("__applied", F.lit(True)),
+                              keys, order_col, guard_cols,
                               drop_null_key_rows=drop_null_key_rows,
                               tiebreak=tiebreak)
 
-    # Rewrite only the touched bucket partitions (dynamic partition overwrite).
     # ``resolved`` reads from table_path, so it cannot overwrite table_path
     # in-place within one job. Eager localCheckpoint materializes the
     # resolved buckets to executor storage (memory, spilling to local disk)
     # and truncates lineage, so the subsequent write no longer depends on
-    # the files it replaces — touched-bucket bytes hit the table exactly
+    # the files it replaces — changed-bucket bytes hit the table exactly
     # once, instead of the old stage-to-temp-parquet round-trip that wrote
     # them twice (r4 finding #2). On a real cluster an executor loss during
     # the write re-runs the whole upsert (checkpoint blocks are not
     # replicated); the operation is idempotent by construction (ST3), so
     # retry-at-the-orchestrator is the intended recovery path.
     resolved = resolved.localCheckpoint(eager=True)
+    # Rewrite only the buckets holding an applied row; an unchanged table
+    # keeps its listing, so the refresh and the invalidation are skipped.
+    changed = [r["__bucket"] for r in
+               resolved.filter(F.col("__applied")).select("__bucket").distinct().collect()]
+    if changed:
+        _overwrite_buckets(
+            spark,
+            resolved.filter(F.col("__bucket").isin(changed)).drop("__applied"),
+            table_path)
+
+
+def _overwrite_buckets(spark: SparkSession, df: DataFrame, table_path: str) -> None:
+    """Replace exactly the bucket partitions present in ``df`` (dynamic
+    partition overwrite), one file per bucket; every other bucket keeps
+    its files. ``df`` must not read from ``table_path`` (checkpoint it)."""
     with_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        resolved.write.partitionBy("__bucket").mode("overwrite").parquet(table_path)
+        _clustered(df).write.partitionBy("__bucket").mode("overwrite").parquet(table_path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_dyn)
     # The rewrite replaced files under paths the session may hold cached
@@ -240,7 +277,10 @@ def upsert(
     # or the next read of an overwritten bucket hits FILE_NOT_EXIST.
     spark.catalog.refreshByPath(table_path)
     # Dynamic partition overwrite leaves sibling dirs (incl. _index)
-    # intact — stale derived artifacts must be dropped explicitly.
+    # intact — stale derived artifacts must be dropped explicitly. (After
+    # a compaction rows are unchanged but the listing is not, so every
+    # fingerprint-keyed artifact would rebuild anyway: drop the
+    # now-unreachable generations rather than leave them on disk.)
     index_store.invalidate(table_path, spark)
 
 
@@ -256,10 +296,11 @@ def compact_buckets(
 ) -> list[int]:
     """Small-file compaction for the bucketed table layout.
 
-    Upsert batches do NOT accrete files (dynamic partition overwrite
-    replaces the touched bucket wholesale); accretion comes from
-    append-mode ingestion (K1) and multi-task bulk loads, where every
-    append/task drops one more file into each bucket it touches — the
+    Upsert batches and full loads do NOT accrete files (each write
+    clusters rows on the bucket, and dynamic partition overwrite replaces
+    a changed bucket wholesale); accretion comes from append-mode
+    ingestion (K1), where every append drops one more file into each
+    bucket it touches — the
     classic small-file problem that at 100 TB degrades listing and task
     bookkeeping long before I/O. Compaction rewrites only buckets whose
     file count exceeds ``max_files_per_bucket`` down to one file per
@@ -284,25 +325,7 @@ def compact_buckets(
     # Same single-write pattern as upsert(): eager localCheckpoint breaks
     # the read-from-table_path dependency so dynamic overwrite is safe
     # without a second parquet write of the compacted buckets.
-    compacted = target.repartition("__bucket").localCheckpoint(eager=True)
-    with_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            compacted.write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(table_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_dyn)
-    # The rewrite replaced files under paths the session may hold cached
-    # listings for (FileStatusCache has no TTL by default) — invalidate,
-    # or the next read of an overwritten bucket hits FILE_NOT_EXIST.
-    spark.catalog.refreshByPath(table_path)
-    # Compaction preserves rows but changes the file listing, so every
-    # fingerprint-keyed artifact would rebuild on next use anyway; drop
-    # the now-unreachable generations rather than leaving them on disk.
-    index_store.invalidate(table_path, spark)
+    _overwrite_buckets(spark, target.localCheckpoint(eager=True), table_path)
     return bloated
 
 

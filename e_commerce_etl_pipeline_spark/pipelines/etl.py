@@ -68,8 +68,11 @@ class RunAudit:
         if base["started_at"] is not None and base["finished_at"] is not None:
             base["duration_s"] = float(base["finished_at"] - base["started_at"])
             base["over_budget"] = base["duration_s"] > self.budget_s
-        df = self.spark.createDataFrame([tuple(base[f.name] for f in AUDIT_SCHEMA.fields)],
-                                        AUDIT_SCHEMA)
+        # built in the JVM from literals: createDataFrame from a Python
+        # list would run a Python-worker job for this one row
+        df = self.spark.range(1, numPartitions=1).select(*(
+            F.lit(base[f.name]).cast(f.dataType).alias(f.name)
+            for f in AUDIT_SCHEMA.fields))
         df.write.mode("append").parquet(self.path)
 
     def runs(self) -> DataFrame:

@@ -53,6 +53,10 @@ def get_spark(app_name: str = "e_commerce_etl_pipeline_spark",
         # parquet scans: vectorized reader + pushdown are on by default;
         # keep split size default (128m) so 100 TB -> ~800k tasks, fine.
         .config("spark.sql.parquet.filterPushdown", "true")
+        # list the 64-bucket upsert layout on the driver: above the
+        # default threshold of 32 leaf directories every read starts a
+        # listing job (~0.4 s on 4 cores); see docs/SCALE.md "The upsert writer"
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
         # driver testdata writes TIMESTAMP(NANOS) parquet, which Spark's
         # reader rejects; read as long and convert (see plans.queries.load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -14,9 +14,12 @@ from e_commerce_etl_pipeline_spark.operators.bucketing import (
     count_exchanges,
     write_bucketed,
 )
+from e_commerce_etl_pipeline_spark.operators import fsops, index_store
 from e_commerce_etl_pipeline_spark.operators.upsert import (
+    _bucket_expr,
     read_upsert_table,
     upsert,
+    write_table,
 )
 
 N_BUCKETS = 4
@@ -110,7 +113,6 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
            num_buckets=8)
     after = _bucket_files(path)
 
-    from e_commerce_etl_pipeline_spark.operators.upsert import _bucket_expr
     touched = batch.select(_bucket_expr(["order_id", "item_id"], 8)).collect()[0][0]
     touched_dir = f"__bucket={touched}"
 
@@ -130,10 +132,7 @@ def test_compact_buckets(spark, tmp_path):
     overwrite replaces the touched bucket wholesale — proven above.)
     Compaction rewrites only buckets over the file threshold, preserves
     rows, leaves slim buckets' files untouched."""
-    from e_commerce_etl_pipeline_spark.operators.upsert import (
-        _bucket_expr,
-        compact_buckets,
-    )
+    from e_commerce_etl_pipeline_spark.operators.upsert import compact_buckets
 
     path = str(tmp_path / "tbl")
     base_ts = datetime.datetime(2024, 1, 1)
@@ -173,3 +172,122 @@ def test_compact_buckets(spark, tmp_path):
     assert rows_after == rows_before
     # idempotent: nothing left to compact
     assert compact_buckets(spark, path, max_files_per_bucket=threshold) == []
+
+
+# --- change-only rewrite: a batch rewrites only the buckets it changes ---
+
+ROW_SCHEMA = "order_id string, item_id string, status string, update_time timestamp"
+KEYS = ["order_id", "item_id"]
+DAY0, DAY1, DAY2 = (datetime.datetime(2024, 1, d) for d in (1, 2, 3))
+
+
+def _apply(spark, path, rows):
+    upsert(spark, spark.createDataFrame(rows, ROW_SCHEMA), path, KEYS,
+           "update_time", ["status"], num_buckets=8)
+
+
+def _seed_table(spark, path):
+    _apply(spark, path, [(f"o{i}", "i1", "created", DAY1) for i in range(64)])
+
+
+def _stored_artifact(spark, path):
+    return index_store.stored_df(spark, path, "test_noop",
+                                 lambda: spark.read.parquet(path).select("order_id"))
+
+
+def _assert_no_op(spark, path, rows):
+    """Applying ``rows`` leaves every parquet file byte-identical and the
+    table's stored index artifact in place (no rebuild on next use)."""
+    _stored_artifact(spark, path)
+    before = _bucket_files(path)
+    content = sorted(read_upsert_table(spark, path).collect())
+    builds = index_store.BUILD_COUNTS.get("test_noop", 0)
+
+    _apply(spark, path, rows)
+
+    assert _bucket_files(path) == before
+    assert fsops.exists(f"{path}/_index/test_noop", spark)
+    _stored_artifact(spark, path)
+    assert index_store.BUILD_COUNTS.get("test_noop", 0) == builds
+    assert sorted(read_upsert_table(spark, path).collect()) == content
+
+
+def test_upsert_replay_writes_nothing(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    _seed_table(spark, path)
+    batch = [("o3", "i1", "shipped", DAY2), ("o70", "i1", "created", DAY1)]
+    _apply(spark, path, batch)
+    _assert_no_op(spark, path, batch)
+
+
+def test_upsert_stale_batch_writes_nothing(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    _seed_table(spark, path)
+    # older versions and an identical re-delivery: none of them applies
+    stale = [("o3", "i1", "shipped", DAY0), ("o5", "i1", "cancelled", DAY0),
+             ("o9", "i1", "created", DAY1)]
+    _assert_no_op(spark, path, stale)
+
+
+def test_upsert_mixed_batch_rewrites_exactly_changed_buckets(spark, tmp_path):
+    """One insert and one update land in changed buckets; a stale row and
+    an identical re-delivery land in other buckets, which the batch
+    touches (reads) but must not rewrite."""
+    path = str(tmp_path / "tbl")
+    _seed_table(spark, path)
+    ids = spark.createDataFrame([(f"o{i}", "i1") for i in range(80)],
+                                "order_id string, item_id string")
+    bucket = dict(ids.select("order_id", _bucket_expr(KEYS, 8)).collect())
+    picked, used = {}, set()
+    for role, pool in (("update", range(64)), ("insert", range(64, 80)),
+                       ("stale", range(64)), ("same", range(64))):
+        key = next(f"o{i}" for i in pool if bucket[f"o{i}"] not in used)
+        picked[role] = key
+        used.add(bucket[key])
+    batch = [(picked["update"], "i1", "shipped", DAY2),
+             (picked["insert"], "i1", "created", DAY1),
+             (picked["stale"], "i1", "cancelled", DAY0),
+             (picked["same"], "i1", "created", DAY1)]
+    before = _bucket_files(path)
+    _apply(spark, path, batch)
+    after = _bucket_files(path)
+
+    rewritten = {d for d in after if after[d] != before.get(d)}
+    changed = {f"__bucket={bucket[picked[r]]}" for r in ("update", "insert")}
+    assert rewritten == changed
+    out = {r.order_id: r.status for r in read_upsert_table(spark, path).collect()}
+    assert out[picked["update"]] == "shipped"
+    assert out[picked["insert"]] == "created"
+    assert out[picked["stale"]] == "created"
+    assert len(out) == 65
+
+
+def test_one_file_per_bucket(spark, tmp_path):
+    """Writes cluster rows on the bucket: every bucket directory holds
+    exactly one parquet file, after the full load and after an upsert that
+    rewrites many buckets, even when the rows reach the write spread over
+    several tasks (AQE coalescing off, as at sizes above its 1 MB floor)."""
+    path = str(tmp_path / "tbl")
+    df = spark.range(400).select(
+        F.concat(F.lit("o"), F.col("id").cast("string")).alias("order_id"),
+        F.lit("i1").alias("item_id"), F.lit("created").alias("status"),
+        F.lit(DAY1).alias("update_time"),
+    ).repartition(4)
+    batch = df.filter(F.col("order_id").endswith("7")).withColumn(
+        "update_time", F.lit(DAY2))
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        write_table(spark, df, path, KEYS, "update_time", num_buckets=8)
+        files = _bucket_files(path)
+        assert len(files) == 8
+        assert all(len(f) == 1 for f in files.values()), files
+
+        upsert(spark, batch, path, KEYS, "update_time", ["status"])
+        files = _bucket_files(path)
+        assert all(len(f) == 1 for f in files.values()), files
+    finally:
+        spark.conf.set(conf, prev)
+    assert read_upsert_table(spark, path).filter(
+        F.col("update_time") == DAY2).count() == 40

@@ -5,12 +5,14 @@ into clone clusters)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
 
 SRC = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -18,7 +20,7 @@ def scaled_dir(tmp_path_factory):
     dst = str(tmp_path_factory.mktemp("scaled") / "sf2x")
     r = subprocess.run(
         [sys.executable, "tools/gen_scale.py", SRC, dst, "2"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=REPO, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     return dst
@@ -71,7 +73,7 @@ def test_hot_pct_plants_join_key_skew(spark, tmp_path):
     dst = str(tmp_path / "sfskew")
     r = subprocess.run(
         [sys.executable, "tools/gen_scale.py", SRC, dst, "2", "30"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=REPO, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     src_ev = spark.read.parquet(f"{SRC}/events.parquet")
@@ -86,7 +88,7 @@ def test_hot_pct_plants_join_key_skew(spark, tmp_path):
     dst2 = str(tmp_path / "sfskew2")
     r2 = subprocess.run(
         [sys.executable, "tools/gen_scale.py", SRC, dst2, "2", "30"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=REPO, timeout=600,
     )
     assert r2.returncode == 0, r2.stderr[-2000:]
     ev2 = spark.read.parquet(f"{dst2}/events.parquet")

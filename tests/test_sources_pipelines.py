@@ -12,7 +12,7 @@ from e_commerce_etl_pipeline_spark.pipelines import (
     full_load_pipeline,
     incremental_pipeline,
 )
-from e_commerce_etl_pipeline_spark.pipelines.etl import SourcePipeline
+from e_commerce_etl_pipeline_spark.pipelines.etl import AUDIT_SCHEMA, SourcePipeline
 from e_commerce_etl_pipeline_spark.schemas import TIKTOK_ORDER_SCHEMA
 from e_commerce_etl_pipeline_spark.sources import (
     PageSpec,
@@ -214,6 +214,11 @@ def test_full_load_then_incremental(spark, tmp_path):
 
     runs = audit.runs().collect()
     assert len(runs) == 2 and all(r.status == "SUCCESS" for r in runs)
+    # the row is built from typed literals; it reads back in the audit schema
+    assert audit.runs().schema == AUDIT_SCHEMA
+    assert sorted(r.records_loaded for r in runs) == [1, 2]
+    assert all(r.duration_s >= 0 and r.over_budget is False and r.error is None
+               for r in runs)
 
 
 def test_incremental_replay_noop(spark, tmp_path):

@@ -8,10 +8,12 @@ bench HEADLINE set at /root/testdata/sf0.1, writes docs/PLANS.md)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 KEEP_DETAIL = ("PushedFilters", "ReadSchema")
 
@@ -95,7 +97,7 @@ def main() -> None:
         out.append("")
         print(f"{name}: exchanges={counts['exchanges']}", file=sys.stderr)
 
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote docs/PLANS.md", file=sys.stderr)
 
